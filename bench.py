@@ -97,6 +97,16 @@ def spin_sec() -> float:
     return round(time.perf_counter() - t0, 4)
 
 
+def time_key(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one ``fn(spark, sf_dir)`` run into a noop sink: full
+    executor-side materialization without driver transfer, so the query is
+    timed, not py4j row serialization. Every timing tool uses this one
+    function, so a tool's number and the bench's number mean the same."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def env_markers(sf_dir: str) -> dict:
     """Environment-noise markers (VERDICT r3 action): lets a reader tell a
     real perf regression from a loaded/cold-cache box without a rerun.
@@ -179,14 +189,7 @@ def main() -> None:
     spark = get_spark("swallow_spark_bench", cpus=cpus)
     qs = declared_queries()
     names = [n for n in HEADLINE if n in qs]
-    def run_once(name: str) -> float:
-        # noop sink: full executor-side materialization without driver
-        # transfer, so we time the query, not py4j row serialization.
-        t0 = time.perf_counter()
-        qs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    run_once("limit_topn")  # warm the JVM + parquet footers
+    time_key(spark, qs["limit_topn"].fn, sf_dir)  # warm the JVM + parquet footers
 
     # Page-cache pre-warm of EVERY input table (the r3 driver bench ran on
     # a cold cache and uniformly inflated the first keys ~1.5x; the env
@@ -210,7 +213,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"bench:{name}")
         try:
             sp = spin_sec()
-            runs = sorted(run_once(name) for _ in range(3))
+            runs = sorted(time_key(spark, qs[name].fn, sf_dir) for _ in range(3))
             timings[name] = round(runs[1], 3)
             spins[name] = sp
             # contention-discounted reading: median / (spin at that moment /
@@ -233,9 +236,7 @@ def main() -> None:
     from swallow_spark.queries.graph import _edges
 
     spark.sparkContext.setJobDescription("bench: shared edge-view build (excluded from graph key timings)")
-    t0 = time.perf_counter()
-    _edges(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    edge_build = round(time.perf_counter() - t0, 3)
+    edge_build = round(time_key(spark, _edges, sf_dir), 3)
 
     # Extended heavies: one unrecorded warm-up run each (codegen compile +
     # persisted-intermediate build), then the same median-of-3 protocol.
@@ -244,9 +245,9 @@ def main() -> None:
     for name in (n for n in EXTENDED if n in qs):
         spark.sparkContext.setJobDescription(f"bench-ext:{name}")
         try:
-            run_once(name)
+            time_key(spark, qs[name].fn, sf_dir)
             sp = spin_sec()
-            runs = sorted(run_once(name) for _ in range(3))
+            runs = sorted(time_key(spark, qs[name].fn, sf_dir) for _ in range(3))
             extended[name] = round(runs[1], 3)
             extended_normalized[name] = round(
                 runs[1] / max(sp / SPIN_REF_SEC, 1.0), 3

@@ -26,6 +26,43 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
+def table_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet files behind a table: the path itself when it is a file,
+    else every ``*.parquet`` part under the Spark-written directory.
+    Hive-style partition subdirectories count; like Spark's reader, entries
+    starting with ``_`` or ``.`` (``_SUCCESS``, an unfinished write's
+    ``_temporary/``) do not. Raises OSError when the path is missing."""
+    path = table_path(sf_dir, name)
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    hidden = ("_", ".")
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+        files += [
+            os.path.join(root, f)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith(hidden)
+        ]
+    return sorted(files)
+
+
+def table_bytes(sf_dir: str, name: str) -> int | None:
+    """On-disk bytes of a table — the basis for size-derived plan rules.
+
+    Sums the part files of a directory table: ``os.path.getsize`` on the
+    directory itself returns the inode size (~4 KB) whatever the data
+    volume. None when the table is missing, unreadable or has no parquet
+    part, so each caller picks its own safe side for an unknown size."""
+    try:
+        files = table_files(sf_dir, name)
+        return sum(os.path.getsize(f) for f in files) if files else None
+    except OSError:
+        return None
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalized to the declared schema's temporal
     types.

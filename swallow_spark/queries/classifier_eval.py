@@ -18,8 +18,6 @@ by construction).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1849,10 +1847,10 @@ def eval_auc_delong_paired(spark, sf_dir):
     replaced by cumulative counts over the per-segment DISTINCT-score
     table (the stats_auc_roc shape — windows bounded by |distinct
     scores|, never user-proportional) — u_pos(s) = 2·neg_below + neg_at,
-    u_neg(s) = 2·pos_below + pos_at from one cumulative pass; the paired
-    moments then weight the JOINT (segment, y, score_a, score_b)
-    aggregate by its count and join the two placement tables back on
-    (segment, score). The oracle keeps the per-row window formulation —
+    u_neg(s) = 2·pos_below + pos_at; the cumulative counts are RANGE-frame
+    window sums over the JOINT (segment, y, score_a, score_b) aggregate
+    itself, whose group counts then weight the paired moments. The
+    oracle keeps the per-row window formulation —
     agreeing results prove the refactor, and the property suite's
     direct-counting Python reference is a third independent derivation.
 
@@ -1868,18 +1866,18 @@ def eval_auc_delong_paired(spark, sf_dir):
     negatives are dropped (sample variance needs m,n ≥ 2, and the micro
     quantizer would divide by zero) — identically in both engines.
 
-    Scale: three partial+final aggregates (per-score marginals ×2,
-    joint pairs), two cumulative windows over bounded distinct-score
-    tables, two (segment, score)-keyed joins, one final aggregate — no
-    corpus-wide or segment-wide row sort anywhere.
+    Scale: one partial+final joint aggregate, two RANGE-frame windows
+    over its groups (one shared segment exchange, so window parallelism
+    is bounded by the segment count), one final aggregate — no join
+    after the customer broadcast.
     """
     from ..ops.materialize import materialize
 
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice").isNotNull())
     c = load(spark, sf_dir, "customer")
-    # materialize the 4-thin-column gate output: tot, both placement
-    # tables, and the joint aggregate all consume `base` — without the
-    # lineage cut the broadcast join + cent quantization re-run 4x
+    # materialize the 4-thin-column gate output. The joint aggregate is its
+    # only consumer, so the cut may no longer pay for itself; dropping it
+    # changes the plan and waits for an interleaved A/B.
     base = materialize(
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
             F.col("c_mktsegment").alias("segment"),
@@ -1892,113 +1890,62 @@ def eval_auc_delong_paired(spark, sf_dir):
             .alias("y"),
         )
     )
-    tot = (
-        base.groupBy("segment")
-        .agg(
-            F.sum("y").cast("long").alias("m"),
-            (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("n"),
-        )
-        .filter((F.col("m") >= 2) & (F.col("n") >= 2))
-    )
-
-    def placements(score: str):
-        """(segment, score, u_pos, u_neg) over the distinct-score table."""
-        g = base.groupBy("segment", score).agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("y").cast("long").alias("pc"),
-        )
-        w = Window.partitionBy("segment").orderBy(score)
-        cum = g.select(
-            "segment",
-            score,
-            "cnt",
-            "pc",
-            F.sum("cnt").over(w).cast("long").alias("nl"),
-            F.sum("pc").over(w).cast("long").alias("pl"),
-        )
-        return cum.select(
-            "segment",
-            score,
-            (
-                2
-                * ((F.col("nl") - F.col("cnt")) - (F.col("pl") - F.col("pc")))
-                + (F.col("cnt") - F.col("pc"))
-            ).alias(f"upos_{score}"),
-            (2 * (F.col("pl") - F.col("pc")) + F.col("pc")).alias(f"uneg_{score}"),
-        )
-
     joint = base.groupBy("segment", "y", "sa", "sb").agg(
         F.count(F.lit(1)).cast("long").alias("cj")
     )
-    if os.environ.get("SWALLOW_DL_JOINED", "0") == "1":
-        # A/B-able joined variant: marginal placement tables joined back
-        # onto the joint aggregate (2 extra aggregates + 2 sort-merge joins
-        # + 1 broadcast join vs the window form below). Interleaved A/B at
-        # sf0.1 over 3 sessions: statistical tie (4.95/2.87/3.52 s joined
-        # vs 4.86/3.58/3.26 s windowed on a contended box); the window form
-        # is the default for its plan (26 Exchange -> 6, 4 SMJ -> 0) — it
-        # shuffles strictly fewer bytes at scale, and the per-segment
-        # window pass it adds is the same magnitude both variants already
-        # pay inside placements(). Round-12 re-measure at sf1 (VERDICT r11
-        # item 5, 10x orders via tools/make_scaled_sf.py): STILL a tie —
-        # trimmed interleaved A/B 2.49 s joined vs 2.55 s windowed (the
-        # non-trimmed pass read 2.83 vs 3.32, inside this box's noise). No
-        # crossover observed up to sf1; the window form stays default on
-        # the strictly-smaller-shuffle rule.
-        j = (
-            joint.join(placements("sa"), ["segment", "sa"])
-            .join(placements("sb"), ["segment", "sb"])
-            .join(F.broadcast(tot), "segment")
+    # A placement depends only on (segment, score), and the joint
+    # aggregate already carries every (segment, y, sa, sb) group with
+    # its count — so the per-score marginal tables and their join-back
+    # collapse into RANGE-frame cumulative sums over `joint` itself
+    # (ties share a frame, so the joint grain reproduces the marginal
+    # cumulative exactly), and the per-segment totals (`tot`) become
+    # whole-partition window sums. Removes 2 aggregate scans, 2
+    # sort-merge joins and a broadcast join; the two window sorts
+    # ((segment, sa), then (segment, sb)) share one segment exchange.
+    # Against that joined form: 26 Exchange -> 6, 4 SMJ -> 0 in the plan,
+    # and a wall-clock tie — interleaved A/Bs at sf0.1 over 3 sessions
+    # (4.95/2.87/3.52 s joined vs 4.86/3.58/3.26 s windowed) and a
+    # trimmed A/B at sf1 (2.49 s joined vs 2.55 s windowed). The window
+    # form is kept on the strictly-smaller-shuffle rule.
+    j = joint
+    for score in ("sa", "sb"):
+        w_cum = (
+            Window.partitionBy("segment")
+            .orderBy(score)
+            .rangeBetween(Window.unboundedPreceding, 0)
         )
-    else:
-        # A placement depends only on (segment, score), and the joint
-        # aggregate already carries every (segment, y, sa, sb) group with
-        # its count — so the per-score marginal tables and their join-back
-        # collapse into RANGE-frame cumulative sums over `joint` itself
-        # (ties share a frame, so the joint grain reproduces the marginal
-        # cumulative exactly), and the per-segment totals (`tot`) become
-        # whole-partition window sums. Removes 2 aggregate scans, 2
-        # sort-merge joins and a broadcast join; the two window sorts
-        # ((segment, sa), then (segment, sb)) share one segment exchange.
-        j = joint
-        for score in ("sa", "sb"):
-            w_cum = (
-                Window.partitionBy("segment")
-                .orderBy(score)
-                .rangeBetween(Window.unboundedPreceding, 0)
-            )
-            w_strict = (
-                Window.partitionBy("segment")
-                .orderBy(score)
-                .rangeBetween(Window.unboundedPreceding, -1)
-            )
-            cj_pos = F.when(F.col("y") == 1, F.col("cj")).otherwise(F.lit(0))
-            below_all = F.coalesce(F.sum("cj").over(w_strict), F.lit(0))
-            below_pos = F.coalesce(F.sum(cj_pos).over(w_strict), F.lit(0))
-            le_all = F.sum("cj").over(w_cum)
-            le_pos = F.sum(cj_pos).over(w_cum)
-            at_all = le_all - below_all
-            at_pos = le_pos - below_pos
-            j = j.withColumns(
-                {
-                    # u_pos(s) = 2·neg_below + neg_at; u_neg(s) = 2·pos_below
-                    # + pos_at — identical integers to the marginal-table form
-                    f"upos_{score}": 2 * (below_all - below_pos)
-                    + (at_all - at_pos),
-                    f"uneg_{score}": 2 * below_pos + at_pos,
-                }
-            )
-        w_seg = Window.partitionBy("segment")
+        w_strict = (
+            Window.partitionBy("segment")
+            .orderBy(score)
+            .rangeBetween(Window.unboundedPreceding, -1)
+        )
+        cj_pos = F.when(F.col("y") == 1, F.col("cj")).otherwise(F.lit(0))
+        below_all = F.coalesce(F.sum("cj").over(w_strict), F.lit(0))
+        below_pos = F.coalesce(F.sum(cj_pos).over(w_strict), F.lit(0))
+        le_all = F.sum("cj").over(w_cum)
+        le_pos = F.sum(cj_pos).over(w_cum)
+        at_all = le_all - below_all
+        at_pos = le_pos - below_pos
         j = j.withColumns(
             {
-                "m": F.sum(
-                    F.when(F.col("y") == 1, F.col("cj")).otherwise(F.lit(0))
-                ).over(w_seg),
-                "n": F.sum(
-                    F.when(F.col("y") == 0, F.col("cj")).otherwise(F.lit(0))
-                ).over(w_seg),
+                # u_pos(s) = 2·neg_below + neg_at; u_neg(s) = 2·pos_below
+                # + pos_at — identical integers to the marginal-table form
+                f"upos_{score}": 2 * (below_all - below_pos)
+                + (at_all - at_pos),
+                f"uneg_{score}": 2 * below_pos + at_pos,
             }
-        ).filter((F.col("m") >= 2) & (F.col("n") >= 2))
+        )
+    w_seg = Window.partitionBy("segment")
+    j = j.withColumns(
+        {
+            "m": F.sum(
+                F.when(F.col("y") == 1, F.col("cj")).otherwise(F.lit(0))
+            ).over(w_seg),
+            "n": F.sum(
+                F.when(F.col("y") == 0, F.col("cj")).otherwise(F.lit(0))
+            ).over(w_seg),
+        }
+    ).filter((F.col("m") >= 2) & (F.col("n") >= 2))
     rowv = j.select(
         "segment",
         "y",

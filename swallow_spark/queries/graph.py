@@ -6,11 +6,9 @@ rows-only per §2.0 rule 6 with a numpy reference test instead).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import load
+from ..io import load, table_bytes
 from ..ops.materialize import materialize
 from ..registry import register
 
@@ -97,13 +95,12 @@ def _oriented_adj(o: DataFrame) -> DataFrame:
     the four triangle-family keys (triangle_count, jaccard_neighbors,
     adamic_adar, local_clustering).
 
-    Round-12 MEASURED NEGATIVE (kept opt-in for reproduction, the katz
-    REPART precedent): both sides of the triangle join consume this table
-    and the two broadcast subtrees differ only by an alias BELOW the
-    exchange, so the collect_list aggregate (0.62 s at sf0.1) and its
-    ~10 MB broadcast appear TWICE in the static plan — an apparent 2x
-    waste. Materializing the adjacency once (SWALLOW_LCC_MAT=1) removes
-    the duplicate, but measured a TIE-TO-LOSS across two interleaved A/B
+    Round-12 MEASURED NEGATIVE: both sides of the triangle join consume
+    this table and the two broadcast subtrees differ only by an alias
+    BELOW the exchange, so the collect_list aggregate (0.62 s at sf0.1)
+    and its ~10 MB broadcast appear TWICE in the static plan — an
+    apparent 2x waste. Materializing the adjacency once removes the
+    duplicate, but measured a TIE-TO-LOSS across two interleaved A/B
     harnesses at sf0.1 (trimmed means, double-build vs materialized:
     local_clustering 2.81 vs 3.00 s, adamic_adar 3.32 vs 3.91 s,
     jaccard_neighbors 3.80 vs 3.91 s, triangle_count 2.18 vs 2.25 s;
@@ -113,12 +110,9 @@ def _oriented_adj(o: DataFrame) -> DataFrame:
     work costs almost no wall-clock, while the eager localCheckpoint is a
     SERIAL barrier plus a write+read of the ~|E|-element adjacency before
     the main job can start. No shuffle-byte advantage either way, so the
-    tie-at-scale rule keeps the overlap-friendly form as default.
+    tie-at-scale rule keeps the overlap-friendly form.
     """
-    adj = o.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
-    if os.environ.get("SWALLOW_LCC_MAT", "0") == "1":
-        return materialize(adj)
-    return adj
+    return o.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
 
 
 @register(
@@ -246,18 +240,15 @@ def graph_pagerank(spark, sf_dir):
     # plan) and replaces both per-iteration sorts with a per-partition hash
     # build of the skinny |V|-row rank vector, which also stays scale-safe
     # (build side is |V|/P rows per task, never a driver broadcast).
-    rank_hint = (
-        (lambda df: df)
-        if os.environ.get("SWALLOW_PR_SMJ", "0") == "1"
-        else (lambda df: df.hint("shuffle_hash"))
-    )
+    # Interleaved A/B at sf0.1 against the SMJ form, two sessions: 4.10 vs
+    # 4.75 s and 5.04 vs 5.90 s (~15%).
     for _ in range(_PR_ITERS):
         # The graph is symmetric (undirected), so every node with an edge
         # receives contributions — contribs covers exactly the node set and
         # the oracle's LEFT JOIN never fires its NULL branch; the rank
         # update therefore needs no per-iteration nodes join at all.
         contribs = (
-            adj.join(rank_hint(ranks), adj["src"] == ranks["node"])
+            adj.join(ranks.hint("shuffle_hash"), adj["src"] == ranks["node"])
             .select(F.explode("nbrs").alias("node"), F.expr("r DIV deg").alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("csum"))
@@ -1267,6 +1258,10 @@ LIMIT 20
 """
 
 
+# lineitem bytes from which katz pre-partitions its edges (derivation at use)
+_KATZ_REPART_MIN_BYTES = 64 << 20
+
+
 @register("graph_katz_centrality", oracle=_KATZ_SQL, tier="T2")
 def graph_katz_centrality(spark, sf_dir):
     """Katz centrality (3 synchronous iterations, attenuation α=1/8, unit
@@ -1310,21 +1305,10 @@ def graph_katz_centrality(spark, sf_dir):
     # partitioning decision from input size, not a constant tuned for one
     # scale): pre-partition when the lineitem input exceeds 64 MB (the
     # measured crossover lies between 11 MB/sf0.1 and 184 MB/sf1; unknown
-    # size defaults to pre-partitioned, the production-safe side).
-    # SWALLOW_KATZ_REPART=0/1 forces either form for A/B.
-    # SWALLOW_KATZ_SMJ=1 restores the pre-round-11 SMJ form for A/B.
-    old_shape = os.environ.get("SWALLOW_KATZ_SMJ", "0") == "1"
-    forced = os.environ.get("SWALLOW_KATZ_REPART")
-    if forced is not None and forced != "":
-        repart = forced == "1"
-    else:
-        from ..io import table_path
-
-        try:
-            repart = os.path.getsize(table_path(sf_dir, "lineitem")) >= 64 << 20
-        except OSError:
-            repart = True
-    if repart:
+    # size defaults to pre-partitioned, the production-safe side). A
+    # directory-layout lineitem is sized by its part files, not the inode.
+    size = table_bytes(sf_dir, "lineitem")
+    if size is None or size >= _KATZ_REPART_MIN_BYTES:
         und = und.repartition("src")
     und = und.persist()
     x = und.groupBy(F.col("dst").alias("node")).agg(
@@ -1332,10 +1316,7 @@ def graph_katz_centrality(spark, sf_dir):
     )
     for _ in range(2):
         x = (
-            und.join(
-                x if old_shape else x.hint("shuffle_hash"),
-                und.src == x.node,
-            )
+            und.join(x.hint("shuffle_hash"), und.src == x.node)
             .groupBy(und.dst.alias("node2"))
             .agg(
                 (F.lit(1000) + F.expr("CAST(SUM(x) AS BIGINT) DIV 8")).alias("x")
@@ -1437,7 +1418,7 @@ def graph_local_clustering(spark, sf_dir):
     # that is the algorithm's working set (the wedge-join alternative was
     # already measured dead in r11: 41M wedge rows through a shuffle).
     # The shared-adjacency materialize was also measured — tie-to-loss,
-    # kept opt-in; see _oriented_adj.
+    # not kept; see _oriented_adj.
     adj = _oriented_adj(o)
     tri = (
         o.join(adj.select(F.col("a"), F.col("nbrs").alias("na")), "a")

@@ -15,13 +15,11 @@ candidate set. All signatures are computed with seeded/fixed constants
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..conform import rnd, sql_rnd
-from ..io import load
+from ..io import load, table_bytes
 from ..ops.text import sql_shingles
 from ..ops.materialize import materialize
 from ..ops.parallel import fan_out
@@ -586,63 +584,40 @@ def dedup_simhash_portable(spark, sf_dir):
     # whose vocabulary outgrows broadcast, drop the hint and let it shuffle
     # on the token key (plan still beats per-occurrence hashing).
     td = tok.select("t").distinct().withColumn("hh", F.expr(_phs("t")))
-    if os.environ.get("SWALLOW_SIMHASH_AFFINE", "0") == "1":
-        # A/B-able pre-round-11 form: the 32 affine parities recomputed on
-        # every (doc, token) row inside the aggregate
-        tok = tok.join(F.broadcast(td), "t")
-        bits = tok.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.when(
-                        (F.lit(2 * j + 1) * F.col("hh") + F.lit(97 * j + 13))
-                        % F.lit(_PP) % 2 == 1,
-                        1,
-                    ).otherwise(-1)
-                ).alias(f"b{j}")
-                for j in range(32)
-            ]
+    # A parity depends only on the token, so compute all 32 affine
+    # parities ONCE per distinct token as a packed 32-bit word on the
+    # (tiny, broadcast) vocabulary table; the per-(doc, token) aggregate
+    # then reduces to 32 shift-and-mask bit sums — no multiply/mod per
+    # occurrence. b_j = Σ±1 = 2·Σbit_j − n_tokens, so the sign test
+    # b_j > 0 becomes 2·s_j > n — identical integers, identical sig.
+    # Interleaved A/B at sf0.1 against the per-occurrence mul+mod form:
+    # 2.08 vs 2.20 s and 1.92 vs 2.32 s.
+    pw_expr = F.expr(
+        " + ".join(
+            f"(shiftleft((({2 * j + 1} * hh + {97 * j + 13}) % {_PP}) % 2,"
+            f" {j}))"
+            for j in range(32)
         )
-        sig_expr = F.expr(
-            " + ".join(
-                f"(CASE WHEN b{j} > 0 THEN shiftleft(cast(1 as bigint), {j}) "
-                "ELSE cast(0 as bigint) END)"
-                for j in range(32)
+    )
+    td = td.select("t", pw_expr.alias("pw"))
+    tok = tok.join(F.broadcast(td), "t")
+    bits = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("nt"),
+        *[
+            F.sum(F.shiftright(F.col("pw"), j).bitwiseAND(F.lit(1))).alias(
+                f"s{j}"
             )
+            for j in range(32)
+        ],
+    )
+    sig_expr = F.expr(
+        " + ".join(
+            f"(CASE WHEN 2 * s{j} > nt THEN shiftleft(cast(1 as bigint),"
+            f" {j}) ELSE cast(0 as bigint) END)"
+            for j in range(32)
         )
-        sigs = bits.select("doc_id", sig_expr.alias("sig"))
-    else:
-        # A parity depends only on the token, so compute all 32 affine
-        # parities ONCE per distinct token as a packed 32-bit word on the
-        # (tiny, broadcast) vocabulary table; the per-(doc, token) aggregate
-        # then reduces to 32 shift-and-mask bit sums — no multiply/mod per
-        # occurrence. b_j = Σ±1 = 2·Σbit_j − n_tokens, so the sign test
-        # b_j > 0 becomes 2·s_j > n — identical integers, identical sig.
-        pw_expr = F.expr(
-            " + ".join(
-                f"(shiftleft((({2 * j + 1} * hh + {97 * j + 13}) % {_PP}) % 2,"
-                f" {j}))"
-                for j in range(32)
-            )
-        )
-        td = td.select("t", pw_expr.alias("pw"))
-        tok = tok.join(F.broadcast(td), "t")
-        bits = tok.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("nt"),
-            *[
-                F.sum(F.shiftright(F.col("pw"), j).bitwiseAND(F.lit(1))).alias(
-                    f"s{j}"
-                )
-                for j in range(32)
-            ],
-        )
-        sig_expr = F.expr(
-            " + ".join(
-                f"(CASE WHEN 2 * s{j} > nt THEN shiftleft(cast(1 as bigint),"
-                f" {j}) ELSE cast(0 as bigint) END)"
-                for j in range(32)
-            )
-        )
-        sigs = bits.select("doc_id", sig_expr.alias("sig"))
+    )
+    sigs = bits.select("doc_id", sig_expr.alias("sig"))
     # NOTE (measured, sf0.1): the posting-list bucket pattern that wins for
     # LSH bands LOSES here — the tiny fixture vocabulary correlates
     # signatures so hard that one segment bucket can hold thousands of
@@ -749,6 +724,10 @@ def dedup_simhash_portable(spark, sf_dir):
 
 # ------------------------------------------------- dedup-layer measurement
 
+# eval_dedup_minhash_quality keeps its shuffled-hash FULL OUTER build up to
+# this many bytes of documents input (derivation at the join).
+_DEDUP_QUALITY_SHJ_MAX_BYTES = 512 << 20
+
 _MINHASH_QUALITY_SQL = f"""
 WITH cand AS ({_MINHASH_PORTABLE_SQL}),
 truth AS (
@@ -822,15 +801,20 @@ def eval_dedup_minhash_quality(spark, sf_dir):
     # instead of the planner's sort-both-sides SMJ (r11 s6 audit).
     # Spill-safety crossover (ADVICE r11): the build side is CORPUS-
     # proportional (exact near-dup pairs, not bounded-by-construction), and
-    # a shuffled-hash build cannot spill — on a heavily-duplicated corpus
-    # where |pairs|·16 B/partition approaches task memory, set
-    # SWALLOW_DEDUP_QUALITY_SMJ=1 to restore the spill-safe SMJ (the
-    # join_full_outer/etl_snapshot_diff rationale). At default shuffle
-    # partitioning the crossover sits around ~10^9 truth pairs per 200
-    # partitions; the sf0.1 corpus builds ~10^3.
-    smj = os.environ.get("SWALLOW_DEDUP_QUALITY_SMJ", "0") == "1"
+    # a shuffled-hash build cannot spill, so past the crossover the
+    # spill-safe SMJ is the right join (the join_full_outer /
+    # etl_snapshot_diff rationale). At default shuffle partitioning the
+    # crossover sits around ~10^9 truth pairs per 200 partitions; the
+    # sf0.1 corpus (0.6 MB of documents) builds ~10^3. The rule is derived
+    # from input bytes (the graph_katz_centrality pattern) under a
+    # worst-case QUADRATIC growth of truth pairs with corpus size: ~10^3 ·
+    # (bytes / 0.6 MB)^2 reaches 10^9 at ~600 MB, so the hash build is
+    # kept up to 512 MB of documents. Unknown size takes SMJ, the
+    # spill-safe side.
+    size = table_bytes(sf_dir, "documents")
+    shj = size is not None and size <= _DEDUP_QUALITY_SHJ_MAX_BYTES
     conf = cand.join(
-        truth if smj else truth.hint("shuffle_hash"),
+        truth.hint("shuffle_hash") if shj else truth,
         (cand.d1 == truth.t1) & (cand.d2 == truth.t2),
         "full_outer",
     ).select(

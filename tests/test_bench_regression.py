@@ -89,9 +89,7 @@ def warm(spark, gate_ok):
     sf_dir = base["sf_dir"]
 
     def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        return bench.time_key(spark, qs[name].fn, sf_dir)
 
     run_once("limit_topn")
     return base, qs, run_once

@@ -883,7 +883,7 @@ def test_recall_sweep_bounded_joinbacks_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
-def test_smj_audit_fixes_pinned(spark, monkeypatch):
+def test_smj_audit_fixes_pinned(spark):
     """Round-11 session 6: the registry-wide hidden-sort audit
     (tools/smj_audit.py) found 17 keys whose STATIC plan carried a
     SortMergeJoin; the ones with a bounded-by-construction or skinny
@@ -892,11 +892,6 @@ def test_smj_audit_fixes_pinned(spark, monkeypatch):
     outers AQE cannot broadcast-convert and the mutual-kNN self-join).
     A SortMergeJoin reappearing in any of them means a bounded side
     regressed to exchange+sort."""
-    # ADVICE r11: two of the pinned shapes are env-switchable back to SMJ
-    # at plan-construction time (intentional spill-safety escapes). Pin the
-    # DEFAULT shape regardless of the ambient environment.
-    monkeypatch.delenv("SWALLOW_MKNN_SMJ", raising=False)
-    monkeypatch.delenv("SWALLOW_DEDUP_QUALITY_SMJ", raising=False)
     for key in (
         "eval_bleu",            # clip join + join-back: ≤50-pair eval grid
         "eval_chrf",            # overlap join + join-back: same grid

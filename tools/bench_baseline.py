@@ -64,9 +64,7 @@ def main() -> None:
         names = list(args.only)
 
     def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        return bench.time_key(spark, qs[name].fn, SF_DIR)
 
     run_once("limit_topn")
     medians: dict[str, float] = {}

@@ -27,7 +27,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -35,7 +34,7 @@ sys.path.insert(0, str(REPO))
 
 
 def _worker(sf: str, cpus: int, keys: list[str]) -> None:
-    from bench import spin_sec  # noqa: E402
+    from bench import spin_sec, time_key  # noqa: E402
 
     from swallow_spark.registry import all_queries  # noqa: E402
     from swallow_spark.session import get_spark  # noqa: E402
@@ -46,14 +45,10 @@ def _worker(sf: str, cpus: int, keys: list[str]) -> None:
     for name in keys:
         spark.sparkContext.setJobDescription(f"scaling:{name}:c{cpus}")
         try:
-            def once() -> float:
-                t0 = time.perf_counter()
-                qs[name].fn(spark, sf).write.format("noop").mode("overwrite").save()
-                return time.perf_counter() - t0
-
-            once()  # warm (codegen + page cache + shared intermediates)
+            # warm (codegen + page cache + shared intermediates)
+            time_key(spark, qs[name].fn, sf)
             sp = spin_sec()
-            runs = sorted(once() for _ in range(3))
+            runs = sorted(time_key(spark, qs[name].fn, sf) for _ in range(3))
             out[name] = {"sec": round(runs[1], 3), "spin": sp}
         except Exception as exc:  # noqa: BLE001
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
