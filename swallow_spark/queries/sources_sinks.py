@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
-from ..io import load, table_path
+from ..io import load, read_table
 from ..registry import register
 
 _IO_ROOT = "/tmp/swallow_spark_io"
@@ -517,7 +517,7 @@ def source_file_metadata(spark, sf_dir):
     ON _metadata.file_name prunes at the file listing, like a partition
     column.
     """
-    o = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    o = read_table(spark, sf_dir, "orders").select(
         F.col("_metadata.file_name").alias("file_name"), "o_orderkey"
     )
     return o.groupBy("file_name").agg(

@@ -532,10 +532,10 @@ def stream_static_enrich(spark, sf_dir):
     import os
     import uuid
 
-    from ..io import load as _load
+    from ..io import load as _load, read_table
 
     epath = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(epath).schema
+    schema = read_table(spark, sf_dir, "events").schema
     nation = _load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
     # FileStreamSource requires a DIRECTORY; stage the (read-only) fixture

@@ -58,3 +58,40 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` runs ``fn()`` in a fresh job group and returns
+    how many Spark jobs it launched, read from the public statusTracker.
+
+    The tracker is fed asynchronously by the listener bus, so a marker job
+    runs after ``fn`` and the count is read once the marker shows up: the
+    bus delivers events in order, so by then every job ``fn`` launched has
+    been recorded."""
+    import itertools
+    import time
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run_in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+
+    def jobs_launched(fn) -> int:
+        n = next(groups)
+        group, marker = f"jobs_launched_{n}", f"jobs_launched_{n}_marker"
+        run_in_group(group, fn)
+        run_in_group(marker, lambda: sc.parallelize([0], 1).count())
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never reached the tracker"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return jobs_launched

@@ -51,6 +51,26 @@ def test_plan_shape(spark, key, required):
     assert required in plan_of(spark, key)
 
 
+@pytest.mark.parametrize(
+    "key",
+    [
+        "agg_pricing_summary",
+        "join_multiway_star",
+        "join_inner_hash",
+        "win_row_number_topk",
+        "limit_topn",
+    ],
+)
+def test_plan_phase_launches_no_job(spark, jobs_launched, key):
+    """Building these benchmarked plans runs no Spark job: once io.load
+    has inferred the tables' schemas, ``fn(spark, sf)`` only plans.
+    An eager action added to one of them fails here instead of silently
+    costing wall time."""
+    fn = all_queries()[key].fn
+    fn(spark, SF)  # warm: schema inference happens here
+    assert jobs_launched(lambda: fn(spark, SF)) == 0
+
+
 def test_flagship_partial_aggregate(spark):
     """Integer-cent sums must partial-aggregate BEFORE the exchange
     (map-side combine) — the reproducibility + shuffle-width guarantee."""
