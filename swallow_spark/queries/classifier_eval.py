@@ -1361,7 +1361,7 @@ def eval_bradley_terry(spark, sf_dir):
     # iteration 3 joins + 2 aggregates + a localCheckpoint lineage cut,
     # ~14 driver actions over ≤k²-row frames. The fit now collects the
     # share matrix once (the repo's bounded-constant-collect idiom —
-    # same class as _kcore_k's scalar and join_bloom_prefilter's word
+    # same class as graph_kcore's k and join_bloom_prefilter's word
     # array) and runs the identical exact-int64 DIV chain in Python:
     # every operand is non-negative and provably < 2^63 (p ≤ 1e6 each
     # iteration ⇒ per-term DIV ≥ 5e5 whenever any n > 0 ⇒ praw ≤ 2e12,

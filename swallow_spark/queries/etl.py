@@ -1291,7 +1291,7 @@ def etl_incremental_dedup(spark, sf_dir):
     # deterministic scalar, but spelling it as a broadcast 1-row
     # crossJoin re-ran the scan+max-aggregate+BNLJ subtree at every use
     # of base/inc — 7 copies in the physical plan. Collect the bounded
-    # scalar once (the repo's _kcore_k idiom) and inline it as a
+    # scalar once (as graph_kcore collects k) and inline it as a
     # literal: base/inc become plain range filters the parquet scan can
     # push down (PushedFilters on doc_id -> row-group pruning), and the
     # 7 BNLJ subtrees disappear. An empty table yields a NULL split

@@ -6,6 +6,8 @@ rows-only per §2.0 rule 6 with a numpy reference test instead).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..io import load, table_bytes
@@ -547,20 +549,9 @@ def graph_degree_distribution(spark, sf_dir):
     )
 
 
-def _kcore_k(deg_df) -> int:
-    """k = floor(median initial degree / 2): deterministic and derived
-    from the data so the key stays meaningful at every scale factor (a
-    fixed k either trivializes or annihilates the core as SF shifts the
-    degree distribution). Half-median is chosen with measured margin: the
-    co-purchase graph's degeneracy is ~0.6–0.7× its median degree
-    (68 vs 89 at sf0.001, 82 vs 115 at sf0.01), so the FULL median core
-    is empty while the half-median core is always substantial."""
-    import pyspark.sql.functions as _F
-
-    return max(
-        1,
-        int(deg_df.agg(_F.expr("percentile(d, 0.5)").alias("m")).first()["m"]) // 2,
-    )
+# Peel-round cap, shared by the Spark loop and the oracle CTE so the two
+# cannot drift apart.
+_KCORE_ROUNDS = 30
 
 
 @register(
@@ -581,10 +572,10 @@ peel(t, src, dst) AS (
            COUNT(*) OVER (PARTITION BY dst) AS dd
     FROM peel
   )
-  WHERE t < 30 AND ds >= (SELECT k FROM kv) AND dd >= (SELECT k FROM kv)
+  WHERE t < {_KCORE_ROUNDS} AND ds >= (SELECT k FROM kv) AND dd >= (SELECT k FROM kv)
 )
 SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
-FROM peel WHERE t = 30
+FROM peel WHERE t = {_KCORE_ROUNDS}
 GROUP BY src
 """,
     tier="T2",
@@ -595,7 +586,15 @@ def graph_kcore(spark, sf_dir):
     peel nodes of degree < k until the remaining subgraph has minimum
     degree ≥ k — the dense backbone used for community seeding and
     spam-cluster isolation. Returns the core's nodes with their
-    within-core degree.
+    within-core degree; an edgeless graph has the empty core.
+
+    k = max(1, floor(median initial degree) // 2): deterministic and
+    derived from the data so the key stays meaningful at every scale
+    factor (a fixed k either trivializes or annihilates the core as SF
+    shifts the degree distribution). Half-median is chosen with measured
+    margin: the co-purchase graph's degeneracy is ~0.6–0.7× its median
+    degree (68 vs 89 at sf0.001, 82 vs 115 at sf0.01), so the FULL median
+    core is empty while the half-median core is always substantial.
 
     ORACLE (promoted from rows-only in round 7): parallel peeling IS
     expressible as a recursive CTE despite the single-working-table-
@@ -603,42 +602,36 @@ def graph_kcore(spark, sf_dir):
     src=node = #rows with dst=node, so the per-round survivor filter
     (deg(src) ≥ k AND deg(dst) ≥ k) is two window COUNTs over ONE scan of
     the working table; no second self-reference, no per-iteration
-    re-aggregation needed. The CTE runs a FIXED 30 rounds (rows keep
-    reproducing after the fixpoint, matching Spark's iteration cap) and
-    the final filter t = 30 reads exactly the 30-round survivor set —
-    which is also the empty set when everything peels, because the
-    recursion then dies early and no t=30 rows exist. k is computed inside
-    the SQL with the same rule as _kcore_k (GREATEST(1,
+    re-aggregation needed. The CTE runs a FIXED _KCORE_ROUNDS rounds (rows
+    keep reproducing after the fixpoint, matching Spark's round cap) and
+    the final filter t = _KCORE_ROUNDS reads exactly the capped survivor
+    set — which is also the empty set when everything peels, because the
+    recursion then dies early and no final-round rows exist. k is computed
+    inside the SQL with the same rule (GREATEST(1,
     floor(quantile_cont(d, .5)) // 2); Spark's percentile ≡ DuckDB's
     quantile_cont linear interpolation, and the midpoint average of two
     int64 degrees is exact in binary on both engines).
     tests/test_graph.py additionally checks the result against an exact
     pandas peeling reference and the min-degree ≥ k invariant.
 
-    Scale note: each peel iteration is one degree aggregate + one semi
-    join on the surviving-node set, with localCheckpoint truncating the
-    loop's lineage (same discipline as PageRank); the edge list only
-    shrinks. Iterations are capped at 30 — degeneracy ordering converges
-    far faster on real graphs, and each pass removes every sub-k node at
-    once (parallel peeling), not one node at a time.
+    Scale note: one aggregate over the initial degree table gives k and
+    min(d). A round runs only while min(d) < k, so each round removes at
+    least one node and none only confirms the fixpoint. A round is one
+    broadcast semi join on the surviving nodes, a materialize (lineage
+    cut, as in PageRank) and one min(d) check on the new degree table,
+    which is the result once the loop stops. Jobs per call: 3 at sf0.001
+    (already a k-core, no round), 10 at sf0.01 and sf0.1 (one round).
+    Stopping at the cap with a node still below k warns.
     """
     e = _edges(spark, sf_dir)
-    edges = (
-        e.selectExpr("src", "dst")
-        .unionAll(e.selectExpr("dst AS src", "src AS dst"))
-        .transform(materialize)
-    )
-    k = _kcore_k(edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
-    # Convergence bookkeeping (round-11 optimization, guide §1.2/§5): the
-    # previous loop ran TWO count() actions per iteration (n_before and
-    # the post-join count); carrying the surviving-edge count forward
-    # halves the per-iteration driver actions — one pass over the
-    # materialized edge blocks per peel instead of two. Identical peel
-    # sequence and fixpoint test (count unchanged by the join == no node
-    # fell below k).
-    n_prev = edges.count()
-    for _ in range(30):
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    edges = e.selectExpr("src", "dst").unionAll(e.selectExpr("dst AS src", "src AS dst"))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    # Empty edge list: one all-NULL row; no round runs, deg is the empty core.
+    m, lo = deg.agg(F.expr("percentile(d, 0.5)"), F.min("d")).first()
+    k = max(1, int(m or 0) // 2)
+    for _ in range(_KCORE_ROUNDS):
+        if lo is None or lo >= k:
+            break
         keep = deg.filter(F.col("d") >= k).select("src")
         edges = (
             edges.join(F.broadcast(keep), "src")
@@ -646,13 +639,16 @@ def graph_kcore(spark, sf_dir):
             .select("src", "dst")
             .transform(materialize)
         )
-        n_now = edges.count()
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-    return (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+        lo = deg.agg(F.min("d")).first()[0]
+    if lo is not None and lo < k:
+        warnings.warn(
+            f"graph_kcore hit the {_KCORE_ROUNDS}-round cap with a node of "
+            f"degree {lo} < k = {k}: the result is not a {k}-core",
+            RuntimeWarning,
+        )
+    return deg.select(
+        F.col("src").alias("node"), F.col("d").cast("long").alias("core_degree")
     )
 
 
